@@ -15,6 +15,10 @@ Spark-first restatement:
   4. exact refine: bbox test as a pure Column predicate (codegen),
      ray-cast pandas UDF only for non-rectangular polygons.
 
+Steps 3-4 are the shared cell-index join (``knn.index_pip_join``)
+over ``knn.QuadIndex``; pip_join_s2 and pip_join_h3 run the same core
+over their own indexes.
+
 Scale notes: the join never shuffles the big side; skewed cells
 (dense urban) are irrelevant to a broadcast join (skew only matters
 for shuffles — the downstream groupBy(cell) aggregation uses partial
@@ -28,9 +32,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.functions.columns import cell_id_col
 from earth_data_kit_spark.functions.udfs import pip_refine_udf
 from earth_data_kit_spark.grid import cells, geom
+from earth_data_kit_spark.operators.knn import QuadIndex, index_pip_join
 
 
 @dataclass
@@ -39,6 +43,21 @@ class Polygon:
     name: str
     wkt: str | None = None  # non-rectangular → ray-cast refine
     bbox: tuple[float, float, float, float] | None = None  # rectangle
+
+    def boxes(self) -> list[tuple[float, float, float, float]]:
+        """The bbox (or the WKT shell's extent) as non-wrapping
+        (xmin, ymin, xmax, ymax) boxes: one crossing the antimeridian
+        (xmin > xmax) splits into its two halves."""
+        if self.bbox is not None:
+            xmin, ymin, xmax, ymax = self.bbox
+        else:
+            shell, _ = geom.parse_wkt_polygon(self.wkt)
+            xs = [q[0] for q in shell]
+            ys = [q[1] for q in shell]
+            xmin, ymin, xmax, ymax = min(xs), min(ys), max(xs), max(ys)
+        if xmin <= xmax:
+            return [(xmin, ymin, xmax, ymax)]
+        return [(xmin, ymin, 180.0, ymax), (-180.0, ymin, xmax, ymax)]
 
     def covering(self, res: int) -> list[int]:
         if self.bbox is not None:
@@ -104,14 +123,14 @@ def pip_join(
         return _pip_join_df(
             pages, polygons, res, lon_col, lat_col, broadcast_covering
         )
-    spark = pages.sparkSession
-    cov = covering if covering is not None else covering_df(spark, polygons, res)
+    index = QuadIndex(res)
+    cov = covering if covering is not None else index.covering(pages.sparkSession, polygons)
     if broadcast_covering is None:
         broadcast_covering = len(polygons) < 10_000
-
-    with_cell = pages.withColumn("cell", cell_id_col(F.col(lon_col), F.col(lat_col), res))
-    cand = with_cell.join(F.broadcast(cov) if broadcast_covering else cov, "cell")
-    return cand.where(refine_predicate(polygons, lon_col, lat_col))
+    return index_pip_join(
+        index, pages, cov, refine_predicate(polygons, lon_col, lat_col),
+        lon_col, lat_col, broadcast_covering,
+    )
 
 
 def _pip_join_df(
@@ -132,14 +151,10 @@ def _pip_join_df(
     norm = P.normalize_polygons_df(polygons)
     if broadcast_covering is None:
         broadcast_covering = norm.count() < P.BROADCAST_MAX_POLYGONS
-    cov = P.covering_cells_df(norm, res)
-    with_cell = pages.withColumn(
-        "cell", cell_id_col(F.col(lon_col), F.col(lat_col), res)
-    )
-    cand = with_cell.join(F.broadcast(cov) if broadcast_covering else cov, "cell")
-    return cand.where(P.refine_predicate_cols(lon_col, lat_col)).drop(
-        "wkt", "xmin", "ymin", "xmax", "ymax"
-    )
+    return index_pip_join(
+        QuadIndex(res), pages, P.covering_cells_df(norm, res),
+        P.refine_predicate_cols(lon_col, lat_col), lon_col, lat_col, broadcast_covering,
+    ).drop("wkt", "xmin", "ymin", "xmax", "ymax")
 
 
 def refine_predicate(polygons: list[Polygon], lon_col: str, lat_col: str) -> "F.Column":

@@ -1,10 +1,11 @@
-"""Point-in-polygon join over REAL S2 cells (grid/s2.py).
+"""The S2 cell index (grid/s2.py) behind the shared cell-index joins.
 
-Same broadcast-covering + exact-refine shape as the quadgrid
-``pip_join`` (spatial_join.py — the driver-gated flagship), but the
-cell scheme is the genuine S2 cell id: Hilbert-curve position over
-the quadratic-ST cube projection.  This is the index the north rule
-names; at 100 TB it buys two things the quadgrid can't:
+``S2Index`` plugs genuine S2 cell ids — Hilbert-curve position over
+the quadratic-ST cube projection — into the one kNN / radius / PIP
+algorithm in ``knn.py`` (``index_knn_join``, ``index_radius_join``,
+``index_pip_join``); ``knn_join_s2``, ``radius_join_s2`` and
+``pip_join_s2`` only build the index and call it.  At 100 TB the S2
+index buys two things the quadgrid can't:
 
 * near-uniform cell area on the sphere (the quadgrid's lat/lon cells
   shrink toward the poles → skewed cells for polar data);
@@ -12,19 +13,18 @@ names; at 100 TB it buys two things the quadgrid can't:
   is range-prunable for ANY ancestor cell via parquet min/max stats,
   no re-bucketing per query level.
 
-Execution shape (the 100 TB plan):
+What the index hides:
 
-  1. ONE vectorized pandas-UDF pass computes the level-30 leaf id per
-     page (`s2_leaf_udf`) — the only Python in the pipeline;
-  2. the join cell at any coarser ``level`` is derived from the leaf
-     by pure JVM bit arithmetic (`s2_parent_col` — two's-complement
-     AND/OR works on int64-reinterpreted ids), inside codegen;
-  3. polygons → S2 covering (driver-side BFS, grid/s2.py) →
-     broadcast equi-join, big side never shuffles;
-  4. exact refine shared with the quadgrid path
-     (`spatial_join.refine_predicate`) — both engines implement the
-     same semantics over different coverings, which is exactly what
-     the parity test asserts (tests/test_s2.py).
+* points key: ONE vectorized pandas-UDF pass computes the level-30
+  leaf id per page (``s2_leaf_udf``) — or reads a stored ``leaf_col``
+  — and the join cell at any coarser ``level`` is derived from the
+  leaf by pure JVM bit arithmetic, joined on its compact prefix form
+  (``s2_prefix_key_col``);
+* polygon covering: driver-side BFS (``s2_covering_df``);
+* query cover at step ``ring``: the BFS k-ring, exact within
+  ``s2_ring_safe_radius_m(level, ring)``; auto-grow jumps to the first
+  ring (in steps of 2) whose safe radius covers the k-th distance and
+  doubles the ring for starved queries.
 
 Reference analog: the reference's nested ST_Intersects loop
 (/root/reference/earth_data_kit/stitching/classes/dataset.py:252-274)
@@ -33,6 +33,8 @@ with the cell-prefilter the north rule prescribes.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from earth_data_kit_spark.grid import s2
+from earth_data_kit_spark.operators.knn import (
+    CellIndex,
+    first_covering_step,
+    index_knn_join,
+    index_pip_join,
+    index_radius_join,
+)
 from earth_data_kit_spark.operators.spatial_join import Polygon, refine_predicate
 
 
@@ -96,20 +105,9 @@ def s2_covering_df(spark: SparkSession, polygons: list[Polygon], level: int) -> 
     the BFS covering (grid/s2.py covering_bbox is wrap-unaware)."""
     rows = []
     for p in polygons:
-        if p.bbox is not None:
-            boxes = [p.bbox]
-        else:
-            from earth_data_kit_spark.grid import geom
-
-            shell, _ = geom.parse_wkt_polygon(p.wkt)
-            xs = [q[0] for q in shell]
-            ys = [q[1] for q in shell]
-            boxes = [(min(xs), min(ys), max(xs), max(ys))]
-        for xmin, ymin, xmax, ymax in boxes:
-            spans = [(xmin, xmax)] if xmin <= xmax else [(xmin, 180.0), (-180.0, xmax)]
-            for lo, hi in spans:
-                for cell in s2.covering_bbox(ymin, ymax, lo, hi, level):
-                    rows.append((p.code, int(s2.to_spark_i64(np.array([cell], dtype=np.uint64))[0])))
+        for xmin, ymin, xmax, ymax in p.boxes():
+            for cell in s2.covering_bbox(ymin, ymax, xmin, xmax, level):
+                rows.append((p.code, int(s2.to_spark_i64(np.array([cell], dtype=np.uint64))[0])))
     pdf = pd.DataFrame(sorted(set(rows)), columns=["code", "cell"])
     pdf["cell"] = pdf["cell"].astype("int64")
     return spark.createDataFrame(pdf, "code string, cell bigint")
@@ -132,49 +130,65 @@ def s2_ring_safe_radius_m(level: int, ring: int) -> float:
     return 0.5 * (ring // 2) * (2.0 ** -level) * 6371000.0
 
 
-def s2_query_cells(queries: DataFrame, level: int, ring: int) -> DataFrame:
-    """(query_id, qlat, qlon, _s2k) BFS k-ring rows per query — the
-    ring side of the S2 kNN/radius joins, generated by an
-    Arrow-batched pandas UDF over the QUERY DataFrame + ``explode``
-    (VERDICT r4 task 1: no driver-side ring loop — a million-row
-    query table expands wherever its rows live).  Keys are the
-    compact prefix form (s2_prefix_key_col)."""
-    shift = 61 - 2 * level
+@dataclass(frozen=True)
+class S2Index(CellIndex):
+    """S2 cells at ``level``, joined on their compact prefix key.
+    ``leaf_col`` names a stored level-30 leaf-id column (leaf computed
+    once at ingest, every query derives its join level in codegen —
+    zero Python on the points side)."""
 
-    @pandas_udf("array<long>")
-    def _rings(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-        cs = s2.cell_from_latlng(
-            qlat.to_numpy(np.float64), qlon.to_numpy(np.float64), level
+    level: int
+    leaf_col: str | None = None
+    key = "_s2k"
+
+    @property
+    def stored(self) -> bool:
+        return self.leaf_col is not None
+
+    def keyed(self, df, lon_col, lat_col):
+        leaf = self.leaf_col
+        if leaf is None:
+            df, leaf = df.withColumn("s2_leaf", s2_leaf_udf()(F.col(lon_col), F.col(lat_col))), "s2_leaf"
+        # `cell` (the true S2 ancestor id) is the PIP output contract;
+        # `_s2k` (its compact prefix form) is the join key
+        return df.withColumn("cell", s2_parent_col(F.col(leaf), self.level)).withColumn(
+            "_s2k", s2_prefix_key_col(F.col(leaf), self.level)
         )
-        return pd.Series(
-            [[int(c2) >> shift for c2 in s2.k_ring(int(c), ring)] for c in cs]
+
+    def covering(self, spark, polygons):
+        return (
+            s2_covering_df(spark, polygons, self.level)
+            .withColumn("_s2k", s2_prefix_key_col(F.col("cell"), self.level))
+            .drop("cell")
         )
 
-    return queries.select(
-        "query_id",
-        "qlat",
-        "qlon",
-        F.explode(_rings(F.col("qlat"), F.col("qlon"))).alias("_s2k"),
-    )
+    def _cell(self, lat, lon) -> int:
+        return int(s2.cell_from_latlng(np.array([float(lat)]), np.array([float(lon)]), self.level)[0])
 
+    def key_of(self, lat, lon):
+        return self._cell(lat, lon) >> (61 - 2 * self.level)
 
-def _s2_indexed_points(
-    points: DataFrame,
-    id_col: str,
-    lon_col: str,
-    lat_col: str,
-    leaf_col: str | None,
-    level: int,
-) -> DataFrame:
-    """(id, lon, lat, _s2k) projection — narrow BEFORE the join so
-    the candidate stream and top-k shuffle carry 3 columns, not the
-    full page row (matches knn.knn_join's projection)."""
-    cols = [id_col, lon_col, lat_col] + ([leaf_col] if leaf_col else [])
-    pts = points.select(*cols)
-    if leaf_col is None:
-        pts = pts.withColumn("s2_leaf", s2_leaf_udf()(F.col(lon_col), F.col(lat_col)))
-        leaf_col = "s2_leaf"
-    return pts.withColumn("_s2k", s2_prefix_key_col(F.col(leaf_col), level)).drop(leaf_col)
+    def cover_keys(self, qlat, qlon, step):
+        shift = 61 - 2 * self.level
+        return [c >> shift for c in s2.k_ring(self._cell(qlat, qlon), int(step))]
+
+    def radius_step(self, radius_m, qlat):
+        ring = 2
+        while s2_ring_safe_radius_m(self.level, ring) < radius_m:
+            ring += 2
+            if ring > 512:
+                raise ValueError("radius too large for this level; use a coarser level")
+        return ring
+
+    def next_step(self, step, max_step, k):
+        # ≥k candidates → first ring in (step, step+2, …, max_step)
+        # whose safe radius covers dk; starved → double
+        covered = first_covering_step(
+            F.sequence(F.lit(step), F.lit(max_step), F.lit(2)),
+            lambda r: F.lit(s2_ring_safe_radius_m(self.level, 2)) * F.floor(r / 2),
+            max_step,
+        )
+        return F.when(F.col("dk").isNotNull(), covered).otherwise(F.lit(step * 2))
 
 
 def knn_join_s2(
@@ -191,84 +205,22 @@ def knn_join_s2(
     max_ring: int = 512,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Top-K nearest points per query over the REAL S2 index — the
-    north rule's "kNN via k-ring expansion with distance re-rank"
-    running on genuine S2 cells; map-side-pruned JVM top-k shared with the
-    quadgrid ``knn.knn_join``.  ``queries`` is a DataFrame
-    ``(query_id, qlat, qlon)`` (rings expand via an Arrow pandas UDF
-    wherever the query rows live — table-to-table join) or a python
-    list (converted).
+    """Top-K nearest points per query over the S2 index — the north
+    rule's "kNN via k-ring expansion with distance re-rank" on genuine
+    S2 cells (``knn.index_knn_join`` over ``S2Index``).  Output:
+    (query_id, rank, <id_col>, dist_m).
 
     Exactness contract: results are exact within
     ``s2_ring_safe_radius_m(level, ring)`` of each query.  With the
     FIXED default ring a sparse region whose true k-th neighbor lies
     beyond that radius returns nearer-ring candidates only — pass
-    ``auto_grow=True`` to verify sufficiency and widen: one probe
-    aggregate per growth computes candidate count and k-th distance
-    per query, the needed ring is a Column joined back to the query
-    table, and the driver reads ONE scalar per iteration (VERDICT r4
-    task 1 — no per-query collect).  Pass ``leaf_col`` for
-    stored-leaf tables (zero Python on the POINTS side at query
-    time); engine-parity is pytest-pinned (tests/test_s2.py).
+    ``auto_grow=True`` to verify sufficiency and widen up to
+    ``max_ring``.  Engine parity is pytest-pinned (tests/test_s2.py).
     """
-    from earth_data_kit_spark.functions.columns import haversine_m_col
-    from earth_data_kit_spark.operators.knn import _topk, queries_df
-
-    spark = points.sparkSession
-    qdf = queries_df(spark, queries)
-    pts = _s2_indexed_points(points, id_col, lon_col, lat_col, leaf_col, level)
-    if auto_grow:
-        pts = pts.persist()
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-
-    def _cand(r: int) -> DataFrame:
-        rings = s2_query_cells(qdf, level, r)
-        return pts.join(F.broadcast(rings) if broadcast_queries else rings, "_s2k")
-
-    def _safe_m(r):
-        # Column twin of s2_ring_safe_radius_m: 0.5·(r//2)·2^-level·R
-        return F.lit(0.5 * (2.0 ** -level) * 6371000.0) * F.floor(r / 2)
-
-    try:
-        while auto_grow and ring < max_ring:
-            # skew-safe probe (mirrors knn.knn_join): hash-agg count +
-            # map-side-pruned top-k for the k-th distance — never a
-            # bare per-query window over every candidate
-            scored0 = _cand(ring).withColumn("dist_m", dist)
-            n_df = scored0.groupBy("query_id").agg(F.count("*").alias("n"))
-            dk_df = (
-                _topk(scored0.select("query_id", id_col, "dist_m"), k, id_col)
-                .where(F.col("rank") == k)
-                .select("query_id", F.col("dist_m").alias("dk"))
-            )
-            full = qdf.join(n_df, "query_id", "left").join(dk_df, "query_id", "left")
-            # ≥k candidates → first ring in (ring, ring+2, …, max_ring)
-            # whose guaranteed radius covers dk; starved (dk null,
-            # incl. zero-candidate queries) → double.
-            rs = F.sequence(F.lit(ring), F.lit(max_ring), F.lit(2))
-            sat = F.filter(rs, lambda r: _safe_m(r) >= F.col("dk"))
-            need_cov = F.coalesce(F.try_element_at(sat, F.lit(1)), F.lit(max_ring))
-            need = F.when(F.col("dk").isNotNull(), need_cov).otherwise(
-                F.lit(ring * 2)
-            )
-            mx = full.agg(F.max(need).alias("need")).first()["need"]
-            if mx is None or mx <= ring:
-                break
-            ring = min(max_ring, int(mx))
-        cand = _cand(ring)
-    except BaseException:
-        if auto_grow:
-            pts.unpersist()
-        raise
-    # deliberately NOT unpersisted on success: the returned DataFrame
-    # is lazy, so an eager unpersist here would force the final
-    # candidate join to recompute the leaf-id UDF pass the persist
-    # existed to avoid (advisor r3).  The cache is released by Spark's
-    # ContextCleaner once the result DataFrame is garbage-collected;
-    # callers holding the result long-term can `.unpersist()` the
-    # input themselves after materializing.
-    scored = cand.withColumn("dist_m", dist).select("query_id", id_col, "dist_m")
-    return _topk(scored, k, id_col)
+    return index_knn_join(
+        S2Index(level, leaf_col), points, queries, k, ring, max_ring,
+        id_col, lon_col, lat_col, auto_grow, broadcast_queries,
+    )
 
 
 def radius_join_s2(
@@ -283,27 +235,12 @@ def radius_join_s2(
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """All points within ``radius_m`` of each query — exact: the ring
-    is grown until s2_ring_safe_radius_m covers the radius, then the
-    haversine predicate refines.  ``queries`` is a DataFrame
-    ``(query_id, qlat, qlon)`` or a list.  Output (query_id,
+    is the first whose ``s2_ring_safe_radius_m`` covers the radius,
+    then the haversine predicate refines.  Output (query_id,
     <id_col>, dist_m)."""
-    from earth_data_kit_spark.functions.columns import haversine_m_col
-    from earth_data_kit_spark.operators.knn import queries_df
-
-    ring = 2
-    while s2_ring_safe_radius_m(level, ring) < radius_m:
-        ring += 2
-        if ring > 512:
-            raise ValueError("radius too large for this level; use a coarser level")
-    spark = points.sparkSession
-    rings = s2_query_cells(queries_df(spark, queries), level, ring)
-    pts = _s2_indexed_points(points, id_col, lon_col, lat_col, leaf_col, level)
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-    return (
-        pts.join(F.broadcast(rings) if broadcast_queries else rings, "_s2k")
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= radius_m)
-        .select("query_id", id_col, "dist_m")
+    return index_radius_join(
+        S2Index(level, leaf_col), points, queries, radius_m,
+        id_col, lon_col, lat_col, broadcast_queries,
     )
 
 
@@ -322,17 +259,8 @@ def pip_join_s2(
     table layout at scale: leaf computed once at ingest, every query
     derives its join level in codegen) to skip the UDF pass entirely.
     """
-    spark = pages.sparkSession
-    cov = s2_covering_df(spark, polygons, level).withColumn(
-        "_s2k", s2_prefix_key_col(F.col("cell"), level)
-    ).drop("cell")
-    if leaf_col is None:
-        pages = pages.withColumn("s2_leaf", s2_leaf_udf()(F.col(lon_col), F.col(lat_col)))
-        leaf_col = "s2_leaf"
-    # `cell` (the true S2 ancestor id) is the output contract; `_s2k`
-    # (its compact prefix form) is the join key — see s2_prefix_key_col
-    with_cell = pages.withColumn(
-        "cell", s2_parent_col(F.col(leaf_col), level)
-    ).withColumn("_s2k", s2_prefix_key_col(F.col(leaf_col), level))
-    cand = with_cell.join(F.broadcast(cov), "_s2k").drop("_s2k")
-    return cand.where(refine_predicate(polygons, lon_col, lat_col))
+    index = S2Index(level, leaf_col)
+    return index_pip_join(
+        index, pages, index.covering(pages.sparkSession, polygons),
+        refine_predicate(polygons, lon_col, lat_col), lon_col, lat_col,
+    )

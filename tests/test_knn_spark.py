@@ -181,3 +181,34 @@ def test_radius_join_df_queries_parity_with_list(spark, pages):
         (r.query_id, r.page_id) for r in knn.radius_join(pages, qdf, 250_000.0, res=6).collect()
     )
     assert a == b and len(a) > 0
+
+
+@pytest.mark.parametrize("engine", ["quadgrid", "s2", "h3"])
+def test_auto_grow_leaves_no_persisted_rdd(spark, engine):
+    """Repetition contract: the growth loop's cache of the points index
+    ends with the loop, so collecting an ``auto_grow`` result leaves
+    the session's persisted RDDs as they were — on every engine."""
+    import gc
+
+    from earth_data_kit_spark.operators.spatial_join_h3 import knn_join_h3
+    from earth_data_kit_spark.operators.spatial_join_s2 import knn_join_s2
+
+    # 20 points within ~5 km of each query: every engine's loop
+    # converges in a round or two
+    rows = [
+        (qid * 100 + i, qlat + (i % 5 - 2) * 0.01, qlon + (i // 5 - 2) * 0.01)
+        for qid, qlat, qlon in QUERIES
+        for i in range(20)
+    ]
+    pts = spark.createDataFrame(rows, "page_id bigint, lat double, lon double")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    join = {
+        "quadgrid": lambda: knn.knn_join(pts, QUERIES, k=3, res=6, ring=1, auto_grow=True),
+        "s2": lambda: knn_join_s2(pts, QUERIES, k=3, level=10, ring=2, auto_grow=True),
+        "h3": lambda: knn_join_h3(pts, QUERIES, k=3, radius_m=20_000.0, auto_grow=True),
+    }[engine]
+    out = join().collect()
+    gc.collect()
+    assert len(out) == 3 * len(QUERIES)
+    assert jsc.getPersistentRDDs().size() == before

@@ -103,6 +103,25 @@ def test_pip_agrees_with_bbox_for_rectangles(lons, lats):
     assert (pip[interior] == bbox[interior]).all()
 
 
+def _index_for(engine: str, res: int, radius_m: float):
+    """The cell index a join over ``engine`` would use at this radius:
+    the quadgrid at ``res``; S2 at the coarsest level whose 2-ring
+    covers the radius (the level the geo_queries radius workload
+    picks) or up to two levels finer; H3 at ``res_for_radius`` (the
+    H3 joins' default)."""
+    import math
+
+    from earth_data_kit_spark.operators.knn import QuadIndex
+    from earth_data_kit_spark.operators.spatial_join_h3 import H3Index, res_for_radius
+    from earth_data_kit_spark.operators.spatial_join_s2 import S2Index
+
+    if engine == "quadgrid":
+        return QuadIndex(res)
+    if engine == "s2":
+        return S2Index(max(2, int(math.log2(6371000.0 / radius_m)) - 1 + (res - 4) // 2))
+    return H3Index(res_for_radius(radius_m))
+
+
 @given(
     qlat=st.floats(-89.0, 89.0),
     qlon=st.floats(-180.0, 179.999),
@@ -110,15 +129,16 @@ def test_pip_agrees_with_bbox_for_rectangles(lons, lats):
     bearing=st.floats(0.0, 360.0),
     frac=st.floats(0.0, 1.0),
     res=st.integers(4, 8),
+    engine=st.sampled_from(["quadgrid", "s2", "h3"]),
 )
 @settings(max_examples=300, deadline=None)
-def test_ring_for_radius_covers_every_in_radius_point(qlat, qlon, radius_m, bearing, frac, res):
-    """Exactness contract of radius_join at ANY latitude (the polar
-    fix): a point at distance frac·radius along any bearing must land
-    in a cell of k_ring(query_cell, ring_for_radius(radius))."""
+def test_ring_for_radius_covers_every_in_radius_point(qlat, qlon, radius_m, bearing, frac, res, engine):
+    """Exactness contract of every cell index (quadgrid, S2, H3) at ANY
+    latitude (the polar fix): a point at distance frac·radius along any
+    bearing must land in a cell of the query's cover at the index's
+    ``radius_step(radius)`` — the step radius_join uses (for S2 and H3
+    also the guaranteed radius their auto-grow kNN relies on)."""
     import math
-
-    from earth_data_kit_spark.operators.knn import ring_for_radius
 
     d = radius_m * frac
     br = math.radians(bearing)
@@ -140,11 +160,11 @@ def test_ring_for_radius_covers_every_in_radius_point(qlat, qlon, radius_m, bear
     if actual > radius_m:
         return
 
-    ring = ring_for_radius(radius_m, res, at_lat=qlat)
-    qcell = cells.cell_id_single(qlon, qlat, res)
-    pcell = cells.cell_id_single(plon, plat, res)
-    assert pcell in set(cells.k_ring(qcell, ring)), (
-        qlat, qlon, radius_m, plat, plon, ring
+    index = _index_for(engine, res, radius_m)
+    step = index.radius_step(radius_m, qlat)
+    cover = set(index.cover_keys(qlat, qlon, step))
+    assert index.key_of(plat, plon) in cover, (
+        engine, index, qlat, qlon, radius_m, plat, plon, step
     )
 
 
